@@ -35,7 +35,7 @@ import shutil
 import tempfile
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 _LIVE: list[DataFrame] = []
@@ -307,6 +307,63 @@ def checkpoint_leaf(df: DataFrame) -> DataFrame:
     for h in handles:
         track_rdd(h)
     return ck
+
+
+def observed_checkpoint(df: DataFrame, *metrics: Column):
+    """:func:`eager_checkpoint` while OBSERVING aggregate ``metrics``
+    inside the same job (``DataFrame.observe``): a convergence test
+    costs zero extra jobs. Returns (checkpointed_df, rdd_handles,
+    metric_values)."""
+    obs = Observation()
+    ck, handles = eager_checkpoint(df.observe(obs, *metrics))
+    return ck, handles, tuple(obs.get.values())
+
+
+def checkpointed_iteration(state: DataFrame,
+                           step: Callable[[DataFrame], DataFrame],
+                           rounds: int, *, until=None,
+                           metrics: tuple[Column, ...] = (), prev=None,
+                           release=(), name: str = "iteration"):
+    """Run ``state = step(state)`` for up to ``rounds`` rounds, eager-
+    checkpointing every round — the one fixpoint/power-iteration loop
+    of the graph operators. Iterative DataFrame loops grow lineage
+    without bound; each round's checkpoint cuts it, and the blocks of
+    the round it supersedes (first round: the caller's ``release``
+    handles, e.g. its own input checkpoint) are dropped at the RDD
+    level as soon as the new round is materialized. The final round's
+    blocks go to :func:`track_rdd` (they back the returned plan, so
+    they live until the next registered query is built).
+
+    Without ``until`` exactly ``rounds`` rounds run (fixed-depth
+    loops). With it, every round observes ``metrics`` inside its
+    checkpoint job (:func:`observed_checkpoint`); the loop stops once
+    ``until(prev, cur)`` holds for the previous and current round's
+    values (``prev`` seeds the first comparison) and raises
+    ``RuntimeError`` if ``rounds`` trips without converging — a
+    silently partial fixpoint would be wrong, not slow (the last
+    round's blocks are still tracked, so ``release_caches`` frees them).
+
+    Returns (state, rounds_run)."""
+    handles = list(release)
+    n, done = 0, until is None
+    for n in range(1, rounds + 1):
+        if until is None:
+            state, nxt = eager_checkpoint(step(state))
+        else:
+            state, nxt, cur = observed_checkpoint(step(state), *metrics)
+        for h in handles:  # superseded round's blocks
+            h.unpersist(False)
+        handles = nxt
+        if until is not None:
+            if until(prev, cur):
+                done = True
+                break
+            prev = cur
+    for h in handles:  # released with the query's caches, even on raise
+        track_rdd(h)
+    if not done:
+        raise RuntimeError(f"{name} did not converge in {rounds} rounds")
+    return state, n
 
 
 def track_rdd(handle) -> None:

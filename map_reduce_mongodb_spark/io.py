@@ -130,12 +130,6 @@ def _inject_task_faults(df: DataFrame) -> DataFrame:
 _SCAN_CACHE: dict[tuple[str, str, str, int, int], DataFrame] = {}
 
 
-def clear_scan_cache() -> None:
-    """Forget memoized scan plans (corpus swaps mid-process are already
-    handled by the stat-keyed cache key; this is for tests)."""
-    _SCAN_CACHE.clear()
-
-
 def table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     """Scan one named table (S5 analogue: full scan; Catalyst prunes)."""
     if name not in TABLE_NAMES:
@@ -184,12 +178,15 @@ def table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFram
                     f"timestampadd(MICROSECOND, {c} DIV 1000, "
                     f"TIMESTAMP_NTZ '1970-01-01 00:00:00')"))
         if key is not None:
-            # Evict superseded stat-keys for the same (session, path)
-            # so in-place rewrites don't accumulate dead entries for
-            # the process lifetime (ADVICE r12 — each entry pins its
-            # JVM session via the py4j reference).
+            # Evict superseded stat-keys for the same (application,
+            # path) so in-place rewrites don't accumulate dead entries
+            # for the process lifetime (ADVICE r12 — each entry pins
+            # its JVM session via the py4j reference). Matched across
+            # session tokens: a stale plan cached through another
+            # wrapper of the same JVM session is just as dead.
             stale = [k for k in _SCAN_CACHE
-                     if k[:3] == key[:3] and k != key]
+                     if (k[0], k[2]) == (key[0], key[2])
+                     and k[3:] != key[3:]]
             for k in stale:
                 del _SCAN_CACHE[k]
             _SCAN_CACHE[key] = df

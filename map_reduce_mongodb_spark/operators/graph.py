@@ -17,7 +17,8 @@ Scale notes:
   materializes a giant array on one task; its edges stay distributed
   rows.
 - Iterative DataFrame loops grow lineage without bound; each round is
-  cut with ``localCheckpoint(eager=True)`` (executor-local blocks). On
+  cut with ``localCheckpoint(eager=True)`` (executor-local blocks) by
+  the one loop helper, ``cache.checkpointed_iteration``. On
   a real cluster with lineage-failure concerns, swap for
   ``spark.sparkContext.setCheckpointDir`` + ``checkpoint()`` — same
   plan shape.
@@ -36,7 +37,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -92,29 +93,15 @@ def _small_star(edges: DataFrame) -> DataFrame:
             .distinct())
 
 
-def _checkpoint(df: DataFrame):
-    """Back-compat delegate — the checkpoint/handle plumbing now lives
-    with the rest of the persistence hygiene in
-    ``cache.eager_checkpoint`` (prefix.py needs the same fail-loud
-    materialization)."""
-    from map_reduce_mongodb_spark.cache import eager_checkpoint
-    return eager_checkpoint(df)
-
-
-def _checkpoint_checksummed(edges: DataFrame):
-    """Eager-checkpoint ``edges`` while OBSERVING its deterministic
-    (count, xxhash64-xor) checksum inside the same job — bit_xor (not
-    sum) of the row hashes is order-insensitive and free of ANSI
-    long-overflow. Returns (checkpointed_df, rdd_handles, (n, h));
-    the convergence test costs zero extra jobs."""
-    obs = Observation()
-    ck, handles = _checkpoint(edges.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("src", "dst")),
-                   F.lit(0)).alias("h")))
-    got = obs.get
-    return ck, handles, (int(got["n"]), int(got["h"]))
+def _edge_checksum():
+    """Deterministic (count, xxhash64-xor) checksum of an edge set —
+    bit_xor (not sum) of the row hashes is order-insensitive and free
+    of ANSI long-overflow. Observed inside each round's checkpoint job
+    (``cache.checkpointed_iteration``), so the convergence test costs
+    zero extra jobs."""
+    return (F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.bit_xor(F.xxhash64("src", "dst")),
+                       F.lit(0)).alias("h"))
 
 
 def symmetrize(pairs: DataFrame, id_a: str = "id_a",
@@ -147,8 +134,7 @@ def cluster_assignments(labels: DataFrame,
 
 
 def connected_components(edges: DataFrame, src: str = "src",
-                         dst: str = "dst", max_iter: int = 25,
-                         checkpoint_input: bool = True) -> DataFrame:
+                         dst: str = "dst", max_iter: int = 25) -> DataFrame:
     """Label every node of the undirected graph `edges` with the
     minimum node id of its connected component.
 
@@ -156,23 +142,9 @@ def connected_components(edges: DataFrame, src: str = "src",
     duplicate/reversed edges are fine). Output: ``(id, cc)`` — one row
     per non-isolated node, ``cc`` = min id in its component (isolated
     nodes never appear in an edge list; callers union them back with
-    cc = id if needed).
-
-    ``checkpoint_input`` (r13): False skips the eager input checkpoint
-    — round 1 then re-evaluates the input expression per symmetrize
-    union branch (4 evaluations), and convergence starts with no input
-    checksum (costing one extra node-scaled confirming round only for
-    inputs that are already a fixpoint star). Measured (r13
-    interleaved A/B at sf0.1, 3 reps): skipping saves exactly one
-    blocking job per invocation but is wall-NEUTRAL-to-slightly-worse
-    even for shared-parquet leaf inputs (4 runtime re-scans cost more
-    than the one materialization job; for inputs carrying joins or a
-    distinct — dbscan's semi-joined core graph, the threshold sweep's
-    contracted deltas — it is ~0.3-1 s WORSE). Every current caller
-    therefore keeps the default True; the knob exists for callers
-    whose input is so cheap AND whose job-count budget is so tight
-    that the trade flips."""
-    from map_reduce_mongodb_spark.cache import note_build_metric, track_rdd
+    cc = id if needed)."""
+    from map_reduce_mongodb_spark.cache import (
+        checkpointed_iteration, note_build_metric, observed_checkpoint)
 
     # No ``.distinct()`` on the input (r12): the star rounds are
     # multiset-tolerant (every aggregate is duplicate-insensitive and
@@ -184,31 +156,18 @@ def connected_components(edges: DataFrame, src: str = "src",
     # multiset with a fixpoint (the count component differs).
     e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
               .where(F.col(src) != F.col(dst)))
-    if checkpoint_input:
-        e, handles, prev = _checkpoint_checksummed(e)
-    else:
-        handles, prev = [], None
-    rounds = 0
-    for _ in range(max_iter):
-        nxt, nxt_handles, cur = _checkpoint_checksummed(
-            _small_star(_large_star(e)))
-        rounds += 1
-        for h in handles:  # superseded iteration's blocks
-            h.unpersist(False)
-        e, handles = nxt, nxt_handles
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds")
+    # The input is checkpointed too (r13 A/B: skipping it saves one job
+    # but re-runs the input subtree per symmetrize branch — wall-neutral
+    # at best), and its checksum lets an input that is already a
+    # fixpoint star converge in one round. Its blocks are released as
+    # soon as round 1 supersedes them.
+    checksum = _edge_checksum()
+    e, handles, prev = observed_checkpoint(e, *checksum)
+    e, rounds = checkpointed_iteration(
+        e, lambda e: _small_star(_large_star(e)), max_iter,
+        until=lambda prev, cur: cur == prev, metrics=checksum,
+        prev=prev, release=handles, name="connected_components")
     note_build_metric("cc_rounds", rounds)
-    # The returned plan hangs off the FINAL checkpoint; its blocks are
-    # handed to the cache registry, so they live until the next
-    # registered query is built (same lifetime as tracked_persist
-    # caches — results must be consumed before the next build).
-    for h in handles:
-        track_rdd(h)
     # At the fixpoint every edge is (member, component-min); the min
     # itself appears only on the right side.
     labels = (e.select(F.col("src").alias("id"), F.col("dst").alias("cc"))
@@ -223,12 +182,8 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a",
     """Near-dup pair list → cluster assignment ``(doc_id, cluster_id,
     cluster_size)``; cluster_id = min doc_id of the component — the
     canonical survivor a keep-one-per-cluster dedup would retain."""
-    labels = connected_components(pairs, src=id_a, dst=id_b)
-    sizes = labels.groupBy("cc").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return (labels.join(sizes, "cc")
-                  .select(F.col("id").alias("doc_id"),
-                          F.col("cc").alias("cluster_id"),
-                          F.col("cluster_size")))
+    return cluster_assignments(
+        connected_components(pairs, src=id_a, dst=id_b))
 
 
 def k_core(pairs: DataFrame, k: int, id_a: str = "id_a",
@@ -252,46 +207,36 @@ def k_core(pairs: DataFrame, k: int, id_a: str = "id_a",
     by data size; ``max_iter`` is a guard rail, and the loop raises if
     it trips without converging (a silently partial core would be
     wrong, not slow)."""
-    from map_reduce_mongodb_spark.cache import note_build_metric, track_rdd
+    from map_reduce_mongodb_spark.cache import note_build_metric
     sym = pairs.select(F.col(id_a).alias("src"),
                        F.col(id_b).alias("dst"))
     edges = sym.union(sym.select(F.col("dst").alias("src"),
                                  F.col("src").alias("dst")))
-    edges, handles, rounds = _peel(edges, k, max_iter)
+    edges, rounds = _peel(edges, k, max_iter)
     note_build_metric("kcore_rounds", rounds)
-    for h in handles:
-        track_rdd(h)
     return (_core_degrees(edges, k)
             .select(F.col("src").alias("id"), "core_degree"))
 
 
 def _peel(edges: DataFrame, k: int, max_iter: int):
     """Peel an already-SYMMETRIC edge set to its k-core fixpoint.
-    Returns (fixpoint_edges, final_checkpoint_handles, rounds). The
-    input's own checkpoint blocks (if any) are the caller's to manage
-    — only this peel's superseded intermediates are released here, so
-    peels can be CHAINED off one another's fixpoints."""
-    handles: list = []
-    prev = None
-    rounds = 0
-    for _ in range(max_iter):
-        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-        keep = deg.where(F.col("d") >= k).select("src")
-        edges, nxt, cur = _checkpoint_checksummed(
-            edges.join(keep, "src", "left_semi")
-            .join(keep.select(F.col("src").alias("dst")), "dst",
-                  "left_semi"))
-        rounds += 1
-        for h in handles:
-            h.unpersist(False)
-        handles = nxt
-        if cur[0] == 0 or cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"k_core did not converge within {max_iter} rounds")
-    return edges, handles, rounds
+    Returns (fixpoint_edges, rounds); the fixpoint's blocks are
+    tracked for bulk release. The input's own checkpoint blocks (if
+    any) are left alone, so peels can be CHAINED off one another's
+    fixpoints."""
+    from map_reduce_mongodb_spark.cache import checkpointed_iteration
+
+    def peel_round(edges: DataFrame) -> DataFrame:
+        keep = (edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+                .where(F.col("d") >= k).select("src"))
+        return (edges.join(keep, "src", "left_semi")
+                .join(keep.select(F.col("src").alias("dst")), "dst",
+                      "left_semi"))
+
+    return checkpointed_iteration(
+        edges, peel_round, max_iter,
+        until=lambda prev, cur: cur[0] == 0 or cur == prev,
+        metrics=_edge_checksum(), name="k_core")
 
 
 def _core_degrees(edges: DataFrame, k: int) -> DataFrame:
@@ -315,18 +260,16 @@ def k_core_profile(pairs: DataFrame, ks: list[int], id_a: str = "id_a",
     blocks stay registered (track_rdd) until the next registered
     query builds — the returned per-depth aggregates read them
     lazily."""
-    from map_reduce_mongodb_spark.cache import note_build_metric, track_rdd
+    from map_reduce_mongodb_spark.cache import note_build_metric
 
     sym = pairs.select(F.col(id_a).alias("src"),
                        F.col(id_b).alias("dst"))
     edges = sym.union(sym.select(F.col("dst").alias("src"),
                                  F.col("src").alias("dst")))
     profiles = []
-    keep_handles: list = []
     for k in sorted(ks):
-        edges, handles, rounds = _peel(edges, k, max_iter)
+        edges, rounds = _peel(edges, k, max_iter)
         note_build_metric("kcore_rounds", rounds)
-        keep_handles.extend(handles)
         profiles.append(
             _core_degrees(edges, k)
             .agg(F.count(F.lit(1)).alias("n_core_docs"),
@@ -334,8 +277,6 @@ def k_core_profile(pairs: DataFrame, ks: list[int], id_a: str = "id_a",
                   .cast("long").alias("max_core_degree"))
             .select(F.lit(k).alias("k"), "n_core_docs",
                     "max_core_degree"))
-    for h in keep_handles:
-        track_rdd(h)
     out = profiles[0]
     for p in profiles[1:]:
         out = out.unionByName(p)

@@ -5432,31 +5432,35 @@ def q_dup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id", (F.lit(0.15) / F.col("n_nodes")).alias("base"),
                 (F.lit(1.0) / F.col("n_nodes")).alias("r0")))
     edges_deg = tracked_persist(sym.join(deg, "id_a"))
-    ranks = base.select("id", F.col("r0").alias("r"))
-    # graph.py's checkpoint discipline: each round's blocks replace
-    # the previous round's (RDD-level release — DataFrame.unpersist
-    # can't), the final round's go to the cache registry
-    from map_reduce_mongodb_spark.cache import track_rdd
-    from map_reduce_mongodb_spark.operators.graph import _checkpoint
-    handles: list = []
-    for _ in range(5):
+    return (_power_iteration(base, edges_deg, 5)
+            .select(F.col("id").alias("doc_id"),
+                    F.round("r", 6).alias("pagerank")))
+
+
+def _power_iteration(base: DataFrame, edges_deg: DataFrame,
+                     rounds: int) -> DataFrame:
+    """``rounds`` damped (0.85) power-iteration steps from ``r0``:
+    ``r'(v) = base(v) + 0.85·Σ_{u→v} r(u)/deg(u)`` over the persisted
+    loop invariants ``base (id, base, r0)`` and ``edges_deg (id_a,
+    id_b, deg)`` — PageRank and personalized PageRank differ only in
+    their teleport vector. Returns ``(id, r)``; each round is
+    checkpointed (cache.checkpointed_iteration)."""
+    from map_reduce_mongodb_spark.cache import checkpointed_iteration
+
+    def step(ranks: DataFrame) -> DataFrame:
         contrib = (edges_deg
                    .join(ranks.withColumnRenamed("id", "id_a"), "id_a")
                    .groupBy(F.col("id_b").alias("id"))
                    .agg(F.sum(F.col("r") / F.col("deg"))
                         .alias("contrib")))
-        ranks, nxt_handles = _checkpoint(
-            base.join(contrib, "id", "left")
-            .select("id",
-                    (F.col("base") + F.lit(0.85)
-                     * F.coalesce("contrib", F.lit(0.0))).alias("r")))
-        for h in handles:  # superseded iteration's blocks
-            h.unpersist(False)
-        handles = nxt_handles
-    for h in handles:
-        track_rdd(h)
-    return ranks.select(F.col("id").alias("doc_id"),
-                        F.round("r", 6).alias("pagerank"))
+        return (base.join(contrib, "id", "left")
+                .select("id",
+                        (F.col("base") + F.lit(0.85)
+                         * F.coalesce("contrib", F.lit(0.0))).alias("r")))
+
+    ranks, _ = checkpointed_iteration(
+        base.select("id", F.col("r0").alias("r")), step, rounds)
+    return ranks
 
 
 @query("events_interarrival", oracle="""
@@ -7095,29 +7099,25 @@ def q_dup_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     table; at 100 TB each round is one shuffle bounded by the
     frontier, and 4 rounds is the fixed probe depth (not data-
     dependent)."""
-    from map_reduce_mongodb_spark.cache import track_rdd
-    from map_reduce_mongodb_spark.operators.graph import _checkpoint
+    from map_reduce_mongodb_spark.cache import checkpointed_iteration
     pairs = _jaccard_pairs_07(spark, sf_dir).select("id_a", "id_b")
     sym = symmetrize(pairs)
     edges = sym.select(F.col("id_a").alias("src"),
                        F.col("id_b").alias("dst"))
-    dist = (edges.select("src").distinct()
-            .where(F.col("src") % 10 == 0)
-            .select(F.col("src").alias("id"), F.lit(0).alias("d")))
-    handles: list = []
-    for _ in range(4):
+
+    def relax(dist: DataFrame) -> DataFrame:
         relaxed = (edges.join(dist.withColumnRenamed("id", "src"),
                               "src")
                    .select(F.col("dst").alias("id"),
                            (F.col("d") + 1).alias("d")))
-        dist, nxt = _checkpoint(
-            dist.unionByName(relaxed).groupBy("id")
-            .agg(F.min("d").alias("d")))
-        for h in handles:
-            h.unpersist(False)
-        handles = nxt
-    for h in handles:
-        track_rdd(h)
+        return (dist.unionByName(relaxed).groupBy("id")
+                .agg(F.min("d").alias("d")))
+
+    dist, _ = checkpointed_iteration(
+        edges.select("src").distinct()
+        .where(F.col("src") % 10 == 0)
+        .select(F.col("src").alias("id"), F.lit(0).alias("d")),
+        relax, 4)
     return dist.select(F.col("id").alias("doc_id"),
                        F.col("d").cast("int").alias("hops"))
 
@@ -7163,8 +7163,8 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     state, lineage cut per round. The oracle unrolls the same 3
     rounds; vote counts and tiebreaks are integer-exact so labels
     match exactly. Reads the shared 0.7-Jaccard pair table."""
-    from map_reduce_mongodb_spark.cache import checkpoint_leaf, track_rdd
-    from map_reduce_mongodb_spark.operators.graph import _checkpoint
+    from map_reduce_mongodb_spark.cache import (
+        checkpoint_leaf, checkpointed_iteration)
     pairs = _jaccard_pairs_07(spark, sf_dir).select("id_a", "id_b")
     sym = symmetrize(pairs)
     edges = sym.select(F.col("id_a").alias("src"),
@@ -7179,23 +7179,18 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("src") % 10 == 0)
         .select(F.col("src").alias("id"),
                 (F.col("src") % 5).alias("lbl")))
-    labels = seeds
-    handles: list = []
-    for _ in range(3):
+
+    def vote(labels: DataFrame) -> DataFrame:
         cnt = (edges.join(labels.withColumnRenamed("id", "src"), "src")
                .groupBy(F.col("dst").alias("id"), "lbl")
                .agg(F.count(F.lit(1)).alias("c")))
         w = Window.partitionBy("id").orderBy(F.desc("c"), F.asc("lbl"))
         win = (cnt.withColumn("rn", F.row_number().over(w))
                .filter(F.col("rn") == 1).select("id", "lbl"))
-        labels, nxt = _checkpoint(
-            seeds.unionByName(
-                win.join(seeds.select("id"), "id", "left_anti")))
-        for h in handles:
-            h.unpersist(False)
-        handles = nxt
-    for h in handles:
-        track_rdd(h)
+        return seeds.unionByName(
+            win.join(seeds.select("id"), "id", "left_anti"))
+
+    labels, _ = checkpointed_iteration(seeds, vote, 3)
     return labels.select(F.col("id").alias("doc_id"),
                          F.col("lbl").cast("int").alias("label"))
 
@@ -8125,8 +8120,7 @@ def q_dup_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     once-materialized 0.7-Jaccard pair table; the oracle unrolls the
     identical 4 iterations, and 6dp rounding absorbs the ~1e-13
     cross-engine float drift (measured for the pagerank twin)."""
-    from map_reduce_mongodb_spark.cache import track_rdd, tracked_persist
-    from map_reduce_mongodb_spark.operators.graph import _checkpoint
+    from map_reduce_mongodb_spark.cache import tracked_persist
     pairs = _jaccard_pairs_07(spark, sf_dir).select("id_a", "id_b")
     sym = symmetrize(pairs)
     deg = sym.groupBy("id_a").agg(
@@ -8143,26 +8137,9 @@ def q_dup_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(seed, F.lit(1.0) / F.col("n_seeds"))
                  .otherwise(F.lit(0.0)).alias("r0")))
     edges_deg = tracked_persist(sym.join(deg, "id_a"))
-    ranks = base.select("id", F.col("r0").alias("r"))
-    handles: list = []
-    for _ in range(4):
-        contrib = (edges_deg
-                   .join(ranks.withColumnRenamed("id", "id_a"), "id_a")
-                   .groupBy(F.col("id_b").alias("id"))
-                   .agg(F.sum(F.col("r") / F.col("deg"))
-                        .alias("contrib")))
-        ranks, nxt = _checkpoint(
-            base.join(contrib, "id", "left")
-            .select("id",
-                    (F.col("base") + F.lit(0.85)
-                     * F.coalesce("contrib", F.lit(0.0))).alias("r")))
-        for h in handles:
-            h.unpersist(False)
-        handles = nxt
-    for h in handles:
-        track_rdd(h)
-    return ranks.select(F.col("id").alias("doc_id"),
-                        F.round("r", 6).alias("ppr"))
+    return (_power_iteration(base, edges_deg, 4)
+            .select(F.col("id").alias("doc_id"),
+                    F.round("r", 6).alias("ppr")))
 
 
 @query("dup_graph_degree_hist", oracle=_CC_CTE + """
@@ -8763,10 +8740,9 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     id tiebreaks in both engines. At 100 TB the pool stage is the
     existing top-k machinery; the MMR stage only ever touches
     |Q|·pool rows."""
-    from map_reduce_mongodb_spark.cache import track_rdd
+    from map_reduce_mongodb_spark.cache import checkpoint_leaf
     from map_reduce_mongodb_spark.functions.vectors import (
         cosine_unrolled)
-    from map_reduce_mongodb_spark.operators.graph import _checkpoint
     from map_reduce_mongodb_spark.operators.similarity import (
         cosine_topk_bruteforce)
     pool, k = 8, 4
@@ -8778,12 +8754,10 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nearly all planning/codegen). Checkpointing the two
     # |Q|·pool-bounded tables — and each step's selection — keeps
     # every step's plan flat over tiny materialized inputs (~1 s).
-    handles: list = []
-    cand, h = _checkpoint(
+    cand = checkpoint_leaf(
         cosine_topk_bruteforce(emb, list(range(5)), k=pool)
         .select("query_id", "neighbor_id",
                 F.col("cosine").alias("rel")))
-    handles += h
     ev = emb.select("vec_id", "embedding")
     candv = (cand.join(ev, cand.neighbor_id == ev.vec_id)
              .select("query_id", "neighbor_id", "embedding"))
@@ -8791,12 +8765,11 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("embedding").alias("va"))
     b = candv.select("query_id", F.col("neighbor_id").alias("id_b"),
                      F.col("embedding").alias("vb"))
-    psim, h = _checkpoint(
+    psim = checkpoint_leaf(
         a.join(b, "query_id")
         .where(F.col("id_a") != F.col("id_b"))
         .select("query_id", "id_a", "id_b",
                 cosine_unrolled("va", "vb", 64).alias("sim")))
-    handles += h
     w1 = Window.partitionBy("query_id").orderBy(
         F.desc("rel"), F.asc("neighbor_id"))
     sel = (cand.withColumn("rn", F.row_number().over(w1))
@@ -8823,10 +8796,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .where(F.col("rn") == 1)
                 .select("query_id", "neighbor_id",
                         F.lit(t).alias("pick"), "score"))
-        sel, h = _checkpoint(sel.unionByName(pick))
-        handles += h
-    for h in handles:
-        track_rdd(h)
+        sel = checkpoint_leaf(sel.unionByName(pick))
     # + 0.0 after the round: a tiny-negative score (float noise when a
     # candidate duplicates a selected vector, rel ≈ ms) rounds to -0.0
     # in DuckDB but 0.0 in Spark, and the value hash is repr-sensitive
@@ -12388,9 +12358,8 @@ def q_benford_first_digit(spark: SparkSession, sf_dir: str
 #      re-check;
 #   2. never-checked rows-only queries (weaker rows+schema evidence,
 #      so they queue behind the oracled backlog — VERDICT r5 #6);
-#   3. ``_REWIRED``: already-green queries whose shared infrastructure
-#      changed since their newest row (maintained by hand per round —
-#      VERDICT r5 #3 names the r5 cache/checkpoint-rework consumers);
+#   3. queries whose NEWEST row is red — a known failure re-enters the
+#      window next round instead of rotating to the back;
 #   4. everything else, oldest evidence first (stable by registration
 #      order within an evidence round), so every query cycles back
 #      through the window over rounds and a regression anywhere is
@@ -12402,171 +12371,6 @@ def q_benford_first_digit(spark: SparkSession, sf_dir: str
 # CORRECTNESS artifact is committed, the next import re-derives the
 # tiers from it. Pure ordering work — no query semantics change.
 _DRIVER_WINDOW = 50
-
-# Already-green queries needing fresh evidence because code they
-# depend on changed since their newest row: name -> minimum round
-# whose evidence counts (an entry expires automatically once a
-# CORRECTNESS_r{>=round}.json row lands, so it stops holding a window
-# slot). r6 entries: consumers of _jaccard_pairs_07 /
-# _md5_minhash_index / cache.py release logic reworked in r5
-# (VERDICT r5 directive #3) — newest rows all r2-era.
-_REWIRED: dict[str, int] = {
-    # r6 sf0.1 parity sweep fixes: round() half-ulp divergences made
-    # bit-exact (exact-cents avg / unrounded exact-operand division)
-    # — outputs changed, so the old green rows no longer describe
-    # the current code.
-    "q2_min_cost_supplier": 7, "events_sliding_window": 7,
-    # distributed_cumsum/_cummax _pid-desync fix (prefix.py now
-    # persists the ranged frame — the old plan could return corrupted
-    # ranks under concurrent load): every evidenced consumer of the
-    # operator re-evidences on the fixed plan.
-    "orders_rfm": 7, "seq_packing": 7, "weighted_sample": 7,
-    "orders_running_quantile": 7, "equidepth_histogram": 7,
-    "revenue_gini": 7, "pareto_revenue_abc": 7,
-    "sorted_neighborhood_pairs": 7, "skyline_parts": 7,
-    # r8 reworks (VERDICT r7 #1-2, ADVICE r7): the threshold sweep
-    # moved to supernode-contraction CC reuse, the CF twins onto the
-    # ONE shared purchase-matrix build, the event-time lane onto
-    # zone-free epoch_us_ntz (same values under UTC; different
-    # physical expression), and the ivf_kmeans gate onto probe_all
-    # derived from the shared index. (dup_graph_threshold_sweep was
-    # rewired here too; its live entry is the r9 one below — Python
-    # keeps the LAST duplicate key, so don't re-add an 8 entry.)
-    "supplier_cf_similarity": 8, "supplier_cf_similarity_capped": 8,
-    "events_interarrival": 8, "events_time_weighted_avg": 8,
-    "funnel_time_to_convert": 8, "events_range_frame": 8,
-    "event_gap_p90": 8, "ivf_kmeans_probe_all": 8,
-    # r8 TZ=America/Sao_Paulo sweep: inflight_sweepline's DATE→LTZ
-    # output cast shifted +1h on Brazil's midnight spring-forwards
-    # (1995-10-15, 1996-10-06) — a REAL wrong answer in a bare
-    # non-UTC session. Fixed to timestamp_ntz there and at every
-    # other output-visible DATE/NTZ→LTZ cast of the same class
-    # (identical values under UTC; different physical expression).
-    "inflight_sweepline": 8, "date_functions": 8,
-    "lineitem_yoy_growth": 8, "user_retention_weekly": 8,
-    # r8: containment twins moved onto the ONE shared shingle-set
-    # build (_containment_base — the CF-matrix treatment).
-    # r8 union→explode plan fixes (a union re-executes each branch's
-    # subtree): triangle corners now emitted from ONE evaluation of
-    # the wedge join (CF twins got the same fix for their dots
-    # symmetrization — already flagged above); word_cooc_lift's two
-    # window distances now explode from one concat instead of
-    # scanning+tokenizing the corpus per distance.
-    # r9: the registry-wide union-duplication sweep (VERDICT r8 #3)
-    # found the last two silent-recompute sites — per-level label
-    # composition in cc_threshold_sweep and dbscan's reused
-    # core/ccall tables — now eagerly checkpointed (identical
-    # values; different physical plan).
-    "dbscan_embeddings": 9,
-    # r9 operator review (same values; different physical plan):
-    # the shared shingle base in the inverted-index dedup operators
-    # is now persisted (was re-derived 4x per query), minhash verify
-    # folded into _verify_jaccard (sizes-minus-inter union formula —
-    # equal on distinct shingle sets), asof_join gained the
-    # payload-struct tiebreak for duplicate right timestamps, and the
-    # counters fast path coalesces all-missing fields to 0.
-    "ngram_jaccard_pairs_fast": 9,
-    "minhash_dedup_pairs": 9, "asof_join_purchases": 9,
-    # r9 queries.py review: the activity bitmap gained the explicit
-    # di∈[0,63] window on BOTH sides (Spark shiftleft wraps mod 64,
-    # DuckDB << does not — out-of-window events now excluded, not
-    # wrapped), assortativity's n_nodes became a lazy broadcast
-    # aggregate (was an eager driver count), and set_except moved to
-    # subtract() (EXCEPT-distinct in one operator).
-    "user_activity_bitmap": 9, "set_except": 9,
-    # r9 randomized-data sweep (tools/gen_random_corpus.py — same
-    # schemas, different seed + in-domain edge injections): zero-token
-    # docs hit an ANSI DIVIDE_BY_ZERO (now a NULL-guarded divisor) and
-    # single-token docs rendered entropy as -0.0 in DuckDB vs 0.0 in
-    # Spark (now +0.0-normalized on both sides). Identical values on
-    # the fixtures; different physical expressions. mmr_rerank: same
-    # -0.0 class via round(tiny-negative score) when a candidate
-    # duplicates a selected vector. (token_count_bpe's r9 entry was
-    # superseded by its r10 one below — literal uniqueness enforced
-    # by test_rewired_literal_has_no_duplicate_keys.)
-    "mmr_rerank": 9,
-    # r10 advisor fixes (ADVICE r9): token_count_bpe's whitespace
-    # class spelled explicitly ([ \t\n\x0B\f\r]) on both engines —
-    # Java \s includes U+000B, RE2 \s does not. Identical values on
-    # every committed corpus (none contain \x0B); different physical
-    # expression.
-    "token_count_bpe": 10,
-    # r10 row-group-layout sweep: the TPC-H money family's product
-    # sums moved from double to DECIMAL — a double sum's last ulp
-    # depends on partial-agg merge order, and the product grid is
-    # 4-decimal so the TRUE sum sits exactly on a half-cent rounding
-    # boundary with ~1% probability per output value (q1's sum_charge
-    # actually flipped with multi-row-group input; the others share
-    # the arithmetic and passed by merge-order luck). Identical
-    # values on the single-row-group fixtures; order-independent
-    # aggregation arithmetic everywhere (_REV_DEC_SQL).
-    "q1_pricing_summary": 10, "multiway_join": 10,
-    "q3_shipping_priority": 10, "q5_local_supplier_volume": 10,
-    "q6_forecast_revenue": 10, "q7_volume_shipping": 10,
-    "q8_market_share": 10, "q9_product_type_profit": 10,
-    "q10_returned_items": 10, "q14_promo_revenue": 10,
-    "q15_top_supplier": 10, "q19_discounted_revenue": 10,
-    # r11 multimodal unicode decoupling (VERDICT r10 #5): payloads
-    # now derive from md5(text) hex instead of the text bytes
-    # (operators/multimodal.py::_payload_source), so OUTPUT VALUES
-    # changed for the whole media family — every member re-evidences.
-    "multimodal_inventory": 11, "multimodal_decode_stats": 11,
-    "video_frame_stats": 11, "image_thumbnails": 11,
-    "audio_features": 11, "image_ahash": 11, "audio_fingerprint": 11,
-    "video_frame_ahash": 11, "video_shot_boundaries": 11,
-    "audio_silence_runs": 11,
-    # r11 scd2_apply defensive duplicate-key compact (VERDICT r10
-    # #6): a max-struct groupBy now precedes the broadcast (identical
-    # values for in-contract single-row-per-key batches; different
-    # physical plan).
-    "scd2_customer_update": 11, "scd2_events_replay": 11,
-    "scd2_snapshot_diff": 11,
-    # r11 whitespace-class sweep (ADVICE r10 generalized): EVERY
-    # \s-splitting site — Spark and oracle — now spells the class
-    # explicitly ([ \t\n\x0B\f\r]), the token_count_bpe treatment
-    # applied engine-portably across the registry. Java \s IS that
-    # class, so Spark values are unchanged; RE2 \s lacks U+000B, so
-    # oracles change only on corpora containing it (none committed;
-    # the corpus contract banned it). Identical values everywhere
-    # committed; different physical expressions on both engines.
-    "bigram_lm_logprob": 11, "bm25_search": 11,
-    "bpe_merge_candidates": 11, "cdc_chunks": 11,
-    "containment_pairs": 11, "containment_pairs_capped": 11,
-    "corpus_curation": 11, "cross_source_dup_matrix": 11,
-    "decontaminate_train": 11, "dedup_clusters": 11,
-    "dedup_exact_groups": 11, "dedup_rate_by_source": 11,
-    "dedup_survivors": 11, "dedup_token_savings": 11,
-    "doc_ngram_novelty": 11, "doc_quality": 11, "doc_repetition": 11,
-    "doc_text_stats": 11, "doc_token_entropy": 11,
-    "dup_graph_assortativity": 11, "dup_graph_bfs": 11,
-    "dup_graph_degree_hist": 11, "dup_graph_local_clustering": 11,
-    "dup_graph_pagerank": 11, "dup_graph_ppr": 11,
-    "dup_graph_stats": 11, "dup_graph_threshold_sweep": 11,
-    "dup_passages": 11, "dup_provenance": 11,
-    "dup_shared_token_runs": 11, "heavy_hitters_mg": 11,
-    "hybrid_search": 11, "incremental_dedup_pairs": 11,
-    "jaccard_prefix_pairs": 11, "label_propagation": 11,
-    "lang_doclen_deciles": 11, "lang_id": 11, "lang_id_confusion": 11,
-    "lang_median_doclen": 11, "lang_token_fertility": 11,
-    "mapreduce_wordcount": 11, "minhash_estimate_accuracy": 11,
-    "minhash_lsh_md5": 11, "negative_sampling_table": 11,
-    "ngram_jaccard_pairs": 11, "quality_percentile_filter": 11,
-    "rrf_fusion": 11, "simhash_fingerprints": 11, "simhash_pairs": 11,
-    "source_vocab_overlap": 11, "tfidf_top_terms": 11,
-    "top_bigrams": 11, "unigram_logprob": 11, "vocab_coverage": 11,
-    "vocab_growth_heaps": 11, "winnow_dup_pairs": 11,
-    "winnow_fingerprints": 11, "word_cooc_lift": 11,
-    # r11 sf≈1 scale-probe fixes (identical values, different plans):
-    # the PCA lane's distributed accumulation moved from y^T y to the
-    # raw second moment (int64 headroom n·mx² instead of 4n³·mx² —
-    # the probe's 10× embeddings table tripped the old guard), and
-    # the stream-stream join's equality key gained a 30-min time
-    # bucket (hot-key state probes were quadratic in the key's
-    # buffered history: 1460 s at 1M events, now ~20 s).
-    "embedding_pca_power_iteration": 11, "embedding_pc1_projection": 11,
-    "embedding_pca_second_component": 11,
-    "embedding_pca_scatter_bins": 11, "stream_stream_join": 11,
-}
 
 # Every rows-only (no-oracle) query names the oracle-checked twin (or
 # pinning test) that proves its machinery exact, so a ``no_oracle``
@@ -12646,12 +12450,10 @@ def _curated_order() -> list[str]:
     never = [n for n in base if n not in newest]
     tier1 = [n for n in never if n in ORACLE_SQL]
     tier2 = [n for n in never if n not in ORACLE_SQL]
-    # tier 3: needs fresh evidence NOW — hand-flagged rewires plus any
-    # query whose newest driver row is red (a failure auto-re-enters
-    # the window; before r7 it silently rotated to the back of tier 4).
-    tier3 = [n for n in base
-             if (n in _REWIRED and n in newest and newest[n] < _REWIRED[n])
-             or (n in red and n in newest)]
+    # tier 3: needs fresh evidence NOW — any query whose newest
+    # CORRECTNESS row is red (a failure auto-re-enters the window;
+    # before r7 it silently rotated to the back of tier 4).
+    tier3 = [n for n in base if n in red]
     seen = set(tier1) | set(tier2) | set(tier3)
     tier4 = sorted((n for n in base if n in newest and n not in seen),
                    key=lambda n: (newest[n], pos[n]))

@@ -107,6 +107,32 @@ def test_no_leaked_caches(spark):
     assert jsc.getPersistentRDDs().size() <= base
 
 
+def test_fixpoints_raise_when_max_iter_trips(spark):
+    """Both converging callers of cache.checkpointed_iteration must
+    raise rather than return a partial fixpoint when ``max_iter`` runs
+    out — and the failed loop's blocks still drop on
+    release_caches()."""
+    from map_reduce_mongodb_spark.cache import release_caches
+    from map_reduce_mongodb_spark.operators.graph import k_core
+
+    jsc = spark.sparkContext._jsc.sc()
+    release_caches()
+    base = jsc.getPersistentRDDs().size()
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(32)], "src: long, dst: long")
+    with pytest.raises(RuntimeError, match="connected_components"):
+        connected_components(path, max_iter=1)
+    # triangle 1-2-3 with the tail 3-4-5: the 2-core peel drops 5 in
+    # round 1 and 4 in round 2
+    tail = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)], "id_a: long, id_b: long")
+    with pytest.raises(RuntimeError, match="k_core"):
+        k_core(tail, k=2, max_iter=1)
+    assert {r.id for r in k_core(tail, k=2).collect()} == {1, 2, 3}
+    release_caches()
+    assert jsc.getPersistentRDDs().size() <= base
+
+
 def test_pagerank_conserves_mass_and_ranks_hubs(spark):
     """dup_graph_pagerank invariants: scores sum to 1 over the graph
     (symmetric graph, no dangling mass) and a hub out-scores leaves."""

@@ -1,7 +1,8 @@
 """Scan-plan memo (io._SCAN_CACHE, r12): the cached object is a lazy
 plan keyed per (session, path, stat) — these pin the three contract
 points: hit on repeat, session isolation (the sql_surface_cte_exists
-regression), and stat-keyed invalidation on rewrite."""
+regression), and stat-keyed invalidation on rewrite, which evicts the
+superseded plan of every session wrapper."""
 
 from __future__ import annotations
 
@@ -38,9 +39,19 @@ def test_child_session_gets_its_own_plan_and_parent_views_resolve(spark):
 
 
 def test_rewritten_file_invalidates_entry(spark, tmp_path):
+    from pyspark.sql import SparkSession
+
+    from map_reduce_mongodb_spark import io
+
     shutil.copy(f"{SF_DIR}/region.parquet", tmp_path / "region.parquet")
+    path = str(tmp_path / "region.parquet")
     before = table(spark, "region", str(tmp_path))
     n_before = before.count()
+    # a second Python wrapper of the SAME JVM session gets its own
+    # scan token, hence its own entry for the path
+    twin = SparkSession(spark.sparkContext, spark._jsparkSession)
+    table(twin, "region", str(tmp_path))
+    assert sum(k[2] == path for k in io._SCAN_CACHE) == 2
     # rewrite the file in place with a subset — mtime/size change
     sub = before.where(F.col("r_regionkey") < 2).toPandas()
     import pyarrow as pa
@@ -49,3 +60,6 @@ def test_rewritten_file_invalidates_entry(spark, tmp_path):
     after = table(spark, "region", str(tmp_path))
     assert after is not before
     assert after.count() == 2 < n_before
+    # the rewrite supersedes BOTH wrappers' plans, not just the
+    # re-reading wrapper's own: no stale plan stays pinned
+    assert sum(k[2] == path for k in io._SCAN_CACHE) == 1

@@ -15,7 +15,6 @@ from map_reduce_mongodb_spark.queries import (
     QUERIES,
     ROWS_ONLY_GATES,
     _DRIVER_WINDOW,
-    _REWIRED,
 )
 
 REPO = Path(__file__).resolve().parent.parent
@@ -26,39 +25,6 @@ def _reported_names() -> set[str]:
     for f in REPO.glob("CORRECTNESS_r*.json"):
         names |= set(json.loads(f.read_text()))
     return names
-
-
-def test_rewired_names_all_registered():
-    missing = [n for n in _REWIRED if n not in QUERIES]
-    assert not missing, f"_REWIRED typos: {missing}"
-
-
-def test_rewired_literal_has_no_duplicate_keys():
-    """A duplicate key in the _REWIRED dict literal is silently
-    shadowed by Python (last wins) — the runtime dict can't see it, so
-    a stale earlier entry would quietly win back if the newer block is
-    ever reordered or deleted (r9 self-review found exactly this:
-    dup_graph_threshold_sweep listed under both r8 and r9). Parse the
-    source and assert literal-level uniqueness."""
-    import ast
-
-    src = (REPO / "map_reduce_mongodb_spark" / "queries.py").read_text()
-    tree = ast.parse(src)
-    lit = None
-    for node in ast.walk(tree):
-        if (isinstance(node, ast.AnnAssign)
-                and isinstance(node.target, ast.Name)
-                and node.target.id == "_REWIRED"):
-            lit = node.value
-        elif (isinstance(node, ast.Assign)
-                and any(isinstance(t, ast.Name) and t.id == "_REWIRED"
-                        for t in node.targets)):
-            lit = node.value
-    assert isinstance(lit, ast.Dict), "_REWIRED dict literal not found"
-    keys = [k.value for k in lit.keys if isinstance(k, ast.Constant)]
-    assert len(keys) == len(lit.keys), "_REWIRED keys must be literals"
-    dupes = sorted({k for k in keys if keys.count(k) > 1})
-    assert not dupes, f"_REWIRED duplicate keys (last wins): {dupes}"
 
 
 def test_window_covers_never_reported_queries():

@@ -24,7 +24,7 @@ def main() -> int:
     args = ap.parse_args()
 
     from map_reduce_mongodb_spark.queries import (
-        ORACLE_SQL, QUERIES, ROWS_ONLY_GATES, _DRIVER_WINDOW, _REWIRED,
+        ORACLE_SQL, QUERIES, ROWS_ONLY_GATES, _DRIVER_WINDOW,
         _evidence_rounds)
 
     newest, red = _evidence_rounds()
@@ -41,8 +41,6 @@ def main() -> int:
                 flags.append("WINDOW")
             if n in red:
                 flags.append("RED")
-            if n in _REWIRED:
-                flags.append(f"rewired>=r{_REWIRED[n]}")
             print(f"{i:3d} {n:42s} {ev:6s} {kind}"
                   + (f"  [{' '.join(flags)}]" if flags else ""))
         return 0
@@ -57,9 +55,6 @@ def main() -> int:
     never = [n for n in names if n not in newest]
     print(f"never driver-checked: {len(never)} "
           f"(in upcoming window: {sum(1 for n in never if n in window)})")
-    pending = {n: r for n, r in _REWIRED.items()
-               if newest.get(n, 0) < r}
-    print(f"rewired awaiting fresh evidence: {sorted(pending)}")
     print(f"red latest rows: {sorted(red & set(names))}")
     return 0
 
